@@ -47,6 +47,13 @@ object IngestCli {
     finally spark.stop()
   }
 
+  /** The `Query*` tasks and the [[QueryServe]] op each one runs. */
+  private val queryOps = Map(
+    "QueryObs" -> "get_obs_timeseries_station_data",
+    "QueryObsAllParms" -> "get_obs_timeseries_station_data_allparms",
+    "QueryForecast" -> "get_forecast_timeseries_station_data",
+    "QueryNowcast" -> "get_nowcast_timeseries_station_data")
+
   /** Task dispatch, separated from main so specs can drive the CLI
     * surface against a shared session. */
   def runTask(spark: SparkSession, task: String, opts: Map[String, String]): Unit = {
@@ -67,19 +74,11 @@ object IngestCli {
           deleteProcessed = opts.get("deleteProcessed").contains("true"))
         println(s"ingested $n new files")
 
-      case "QueryObs" =>
+      case "QueryObs" | "QueryObsAllParms" | "QueryForecast" | "QueryNowcast" =>
+        // one-shot form of a QueryServe request: the --options are the
+        // request's parameters (QueryServe.answer documents each op's)
         val store = GaugeStore.open(spark, req("store"), opts.get("backend"))
-        println(QueryApi.obsTimeseriesStationDataJson(
-          store.gaugeDataForRange(req("start"), req("end")),
-          store.gaugeSource, store.stations,
-          req("station"), req("start"), req("end")))
-
-      case "QueryObsAllParms" =>
-        val store = GaugeStore.open(spark, req("store"), opts.get("backend"))
-        println(QueryApi.obsTimeseriesStationDataAllParmsJson(
-          store.gaugeDataForRange(req("start"), req("end")),
-          store.gaugeSource, store.stations,
-          req("station"), req("start"), req("end"), req("nowcastSource")))
+        println(QueryServe.answer(store, opts + ("op" -> queryOps(task))))
 
       case "ModelRunIngest" =>
         // SequenceIngest for one ADCIRC run dir (runModelIngest.py:553-580):
@@ -95,29 +94,6 @@ object IngestCli {
           processingDatetime = opts.get("now"),
           advisory = opts.get("advisory"))
         println(s"ingested $n model files")
-
-      case "QueryForecast" =>
-        val store = GaugeStore.open(spark, req("store"), opts.get("backend"))
-        val df = QueryApi.forecastTimeseriesStationData(
-          store.modelDataForTimemark(req("timemark").replace("T", " ")),
-          store.modelSource, store.stations,
-          req("station"), req("timemark"), req("maxEnd"),
-          req("dataSource"), req("instance"))
-        println(QueryApi.jsonAgg(df, "time_stamp",
-          df.columns.filterNot(_ == "time_stamp").toSeq))
-
-      case "QueryNowcast" =>
-        val store = GaugeStore.open(spark, req("store"), opts.get("backend"))
-        // run_date-pruned like the QueryServe nowcast path; horizon
-        // contract documented on GaugeStore.modelDataForRange
-        val df = QueryApi.nowcastTimeseriesStationData(
-          store.modelDataForRange(req("start"), req("end"),
-            opts.getOrElse("horizonDays", "35").toInt),
-          store.modelSource, store.stations,
-          req("station"), req("start"), req("end"),
-          req("dataSource"), req("instance"))
-        println(QueryApi.jsonAgg(df, "time_stamp",
-          df.columns.filterNot(_ == "time_stamp").toSeq))
 
       case "QueryServe" =>
         // long-running read-path endpoint (QueryServe scaladoc): one

@@ -173,6 +173,41 @@ class GaugeStore(val spark: SparkSession, val root: String) {
 
   def gaugeSource: DataFrame = spark.read.parquet(path("gauge_source"))
 
+  // ---- driver-local copies of the small dims (serving path) --------
+
+  /** Per dim table: (listing signature, driver-local copy). Held per
+    * store instance, so two stores in one session never share one. */
+  private val localDims = new java.util.concurrent.ConcurrentHashMap[
+    String, (Seq[(String, Long, Long)], DataFrame)]()
+
+  /** `read` of a small dim table as a driver-local frame
+    * (`LocalRelation`), reused while the table directory's listing —
+    * file name, length, mtime — is unchanged. Every dim rewrite
+    * ([[writeStations]], [[markApsVizStations]], [[writeGaugeSource]],
+    * [[writeModelSource]]) writes new part files, so the next call
+    * sees the change. A hit costs one directory listing and no Spark
+    * job, and a filter + collect over the copy plans to a
+    * `LocalTableScan`, which runs no job either. The listing is taken
+    * BEFORE the read: a racing rewrite can only leave a copy newer
+    * than its signature (re-read on the next call), never older. */
+  private def localDim(table: String, read: => DataFrame): DataFrame = {
+    val sig = try fsys.listStatus(new org.apache.hadoop.fs.Path(path(table)))
+      .toSeq.map(s => (s.getPath.getName, s.getLen, s.getModificationTime)).sorted
+    catch { case _: java.io.FileNotFoundException => return read }
+    Option(localDims.get(table)).collect { case (`sig`, df) => df }.getOrElse {
+      val df = read
+      val local = spark.createDataFrame(java.util.Arrays.asList(df.collect(): _*), df.schema)
+      localDims.put(table, (sig, local))
+      local
+    }
+  }
+
+  /** [[stations]], [[gaugeSource]], [[modelSource]] as driver-local
+    * copies (see [[localDim]]) — the dims every served request reads. */
+  def localStations: DataFrame = localDim("stations", stations)
+  def localGaugeSource: DataFrame = localDim("gauge_source", gaugeSource)
+  def localModelSource: DataFrame = localDim("model_source", modelSource)
+
   /** Append a batch of fact rows. Adds the partition columns; the
     * caller has already deduplicated within the batch. */
   def appendGaugeData(df: DataFrame, dataSource: String): Unit =
@@ -458,13 +493,19 @@ class GaugeStore(val spark: SparkSession, val root: String) {
     * |time − timemark| for the rows being served — a run outside it
     * is pruned SILENTLY. The default (35 days) is generous even for
     * monthly run cadences; a deployment with longer hindcasts must
-    * pass its own. */
+    * pass its own. A negative horizon would prune every run and serve
+    * an empty answer, so it is rejected. */
   def modelDataForRange(startDate: String, endDate: String,
-      horizonDays: Int = 35): DataFrame =
+      horizonDays: Int = 35): DataFrame = {
+    requireHorizon(horizonDays)
     spark.read.parquet(path("model_data"))
       .filter(col("run_date") >= date_sub(to_date(lit(startDate)), horizonDays) &&
         col("run_date") <= date_add(to_date(lit(endDate)), horizonDays))
       .drop("run_date")
+  }
+
+  protected def requireHorizon(horizonDays: Int): Unit =
+    require(horizonDays >= 0, s"horizonDays must be >= 0, got $horizonDays")
 
   def hasModelData: Boolean = tableExists("model_data")
 

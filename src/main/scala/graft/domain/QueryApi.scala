@@ -1,7 +1,7 @@
 package graft.domain
 
 import graft.operators.FixedPivot
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** The engine's read path — Spark restatement of the reference's views
@@ -9,11 +9,14 @@ import org.apache.spark.sql.functions._
   * parameterized DataFrame pipeline; `*Json` variants reproduce the
   * JSON_AGG contract.
   *
-  * Scale: station/source dims broadcast into the fact; the station +
-  * time predicate prunes fact partitions before any shuffle; the pivot
-  * uses a fixed category list (no distinct-scan); the final JSON_AGG
-  * collapses to a single row only AFTER the per-station filter has cut
-  * the data to one station's window.
+  * Scale: the four request functions do not join. They resolve the
+  * station/source dims on the driver (`stationFacts`), filter the fact
+  * to the station's source ids and time window, and run the pivot,
+  * sort and JSON_AGG over ONE partition: no Exchange, one Spark job
+  * per request, and the fact scan one task over the window-pruned
+  * files. The pivot uses a fixed category list (no distinct-scan).
+  * The SQL views ([[gaugeStationSourceData]], [[registerViews]]) keep
+  * the broadcast star join for unbounded ad-hoc reads.
   */
 object QueryApi {
 
@@ -66,21 +69,64 @@ object QueryApi {
     "coastal_gauge" -> "coastal_gauge_water_level",
     "river_gauge" -> "river_gauge_water_level")
 
+  /** The fact rows behind one station's request, each tagged with its
+    * source's `data_source`: the rows, with their multiplicity, of
+    * `gaugeStationSourceData(fact, source, station)` filtered on
+    * `station_name`, `factFilter` and `sourceFilter` — without the
+    * join. The dims resolve on the driver: one collect maps the name to
+    * its station_id(s), one more maps those to their source rows. Over
+    * driver-local dims ([[GaugeStore.localStations]] and friends)
+    * neither runs a Spark job; over parquet dims each is one tiny job.
+    * The fact is then filtered on `source_id IN (...)` and tagged from
+    * a literal `source_id → data_source*` map; `explode` repeats a row
+    * once per matching (source row, station row) pair, exactly as the
+    * join would — a station name held by two station_ids included.
+    *
+    * The result is coalesced to ONE partition, so the pivot, sort and
+    * JSON_AGG above it need no Exchange and the request runs as one
+    * Spark job. The price is that the request's fact scan is one task
+    * over its window-pruned files — bounded by the window, not by the
+    * store, but not parallel either. */
+  private def stationFacts(
+      fact: DataFrame, source: DataFrame, station: DataFrame,
+      stationName: String, factFilter: Column,
+      sourceFilter: Column = lit(true)): DataFrame = {
+    val stationIds = station
+      .filter(col("station_name") === stationName && col("station_id").isNotNull)
+      .select(col("station_id").cast("long")).collect().map(_.getLong(0))
+    val rowsPerId = stationIds.groupBy(identity).map { case (id, ns) => id -> ns.length }
+    val tags: Map[Long, Seq[String]] =
+      if (rowsPerId.isEmpty) Map.empty
+      else source
+        .filter(col("station_id").isin(rowsPerId.keys.toSeq: _*) &&
+          col("source_id").isNotNull && sourceFilter)
+        .select(col("source_id").cast("long"), col("station_id").cast("long"),
+          col("data_source"))
+        .collect().toSeq
+        .flatMap(r => Seq.fill(rowsPerId(r.getLong(1)))(r.getLong(0) -> r.getString(2)))
+        .groupMap(_._1)(_._2)
+    fact.filter(col("source_id").isin(tags.keys.toSeq: _*) && factFilter)
+      .withColumn("data_source",
+        explode(element_at(typedLit(tags), col("source_id").cast("long"))))
+      .coalesce(1)
+  }
+
+  private def timeBetween(lo: String, hi: String): Column =
+    col("time") >= lit(lo).cast("timestamp") && col("time") <= lit(hi).cast("timestamp")
+
   /** get_obs_timeseries_station_data(station, start, end) →
     * one row per time, the 5 fixed data_source columns
     * (scripts/get_obs_timeseries_station_data.sql:7-44). */
   def obsTimeseriesStationData(
       fact: DataFrame, source: DataFrame, station: DataFrame,
       stationName: String, startDate: String, endDate: String): DataFrame = {
-    val joined = gaugeStationSourceData(fact, source, station)
-      .filter(col("station_name") === stationName &&
-        col("time") >= lit(startDate).cast("timestamp") &&
-        col("time") <= lit(endDate).cast("timestamp"))
+    val rows = stationFacts(fact, source, station, stationName,
+      timeBetween(startDate, endDate))
       .select(
         date_format(col("time"), "yyyy-MM-dd HH:mm:ss").as("time_stamp"),
         col("data_source"),
         coalesce(col("water_level"), col("wave_height")).as("yaxis"))
-    val pivoted = FixedPivot(joined, Seq("time_stamp"), "data_source",
+    val pivoted = FixedPivot(rows, Seq("time_stamp"), "data_source",
       obsPivotColumns.map(_._1), first(col("yaxis")))
     obsPivotColumns.foldLeft(pivoted) { case (df, (cat, out)) =>
       df.withColumnRenamed(cat, out)
@@ -95,6 +141,18 @@ object QueryApi {
     jsonAgg(obsTimeseriesStationData(fact, source, station, stationName, startDate, endDate),
       "time_stamp", obsPivotColumns.map(_._2))
 
+  /** Fixed-key crosstab categories of the all-parameters variant, in
+    * output order; the request's `nowcastSource` goes after the first. */
+  private val allParmsColumns: Seq[(String, String)] = Seq(
+    "air_barometer" -> "air_barometer",
+    "ocean_buoy" -> "ocean_buoy_wave_height",
+    "tidal_gauge" -> "tidal_gauge_water_level",
+    "tidal_predictions" -> "tidal_predictions",
+    "coastal_gauge" -> "coastal_gauge_water_level",
+    "river_gauge" -> "river_gauge_water_level",
+    "stream_gauge" -> "stream_gauge_stream_elevation",
+    "wind_anemometer" -> "wind_anemometer")
+
   /** All-parameters variant of the obs query
     * (scripts/get_obs_timeseries_station_data_allparms.sql:7-57):
     * 6-way measure COALESCE, 9 categories including the parameterized
@@ -108,31 +166,18 @@ object QueryApi {
     // duplicate the pivot value (duplicate columns -> ambiguous
     // reference AnalysisException); its data already serves under the
     // fixed category's column
-    val fixedKeys = Set("air_barometer", "ocean_buoy", "tidal_gauge",
-      "tidal_predictions", "coastal_gauge", "river_gauge", "stream_gauge",
-      "wind_anemometer")
     val nowcastCat: Seq[(String, String)] =
-      if (fixedKeys.contains(nowcastSource)) Nil
+      if (allParmsColumns.exists(_._1 == nowcastSource)) Nil
       else Seq(nowcastSource -> FixedPivot.sanitize(nowcastSource))
-    val cats: Seq[(String, String)] = Seq(
-      "air_barometer" -> "air_barometer") ++ nowcastCat ++ Seq(
-      "ocean_buoy" -> "ocean_buoy_wave_height",
-      "tidal_gauge" -> "tidal_gauge_water_level",
-      "tidal_predictions" -> "tidal_predictions",
-      "coastal_gauge" -> "coastal_gauge_water_level",
-      "river_gauge" -> "river_gauge_water_level",
-      "stream_gauge" -> "stream_gauge_stream_elevation",
-      "wind_anemometer" -> "wind_anemometer")
-    val joined = gaugeStationSourceData(fact, source, station)
-      .filter(col("station_name") === stationName &&
-        col("time") >= lit(startDate).cast("timestamp") &&
-        col("time") <= lit(endDate).cast("timestamp"))
+    val cats = allParmsColumns.head +: (nowcastCat ++ allParmsColumns.tail)
+    val rows = stationFacts(fact, source, station, stationName,
+      timeBetween(startDate, endDate))
       .select(
         date_format(col("time"), "yyyy-MM-dd HH:mm:ss").as("time_stamp"),
         col("data_source"),
         coalesce(col("water_level"), col("stream_elevation"), col("wave_height"),
           col("wind_speed"), col("air_pressure"), col("flow_volume")).as("yaxis"))
-    val pivoted = FixedPivot(joined, Seq("time_stamp"), "data_source",
+    val pivoted = FixedPivot(rows, Seq("time_stamp"), "data_source",
       cats.map(_._1), first(col("yaxis")))
     cats.foldLeft(pivoted) { case (df, (cat, out)) =>
       if (cat == out) df else df.withColumnRenamed(cat, out)
@@ -155,22 +200,15 @@ object QueryApi {
   def forecastTimeseriesStationData(
       fact: DataFrame, source: DataFrame, station: DataFrame,
       stationName: String, timemark: String, maxForecastEndtime: String,
-      dataSource: String, sourceInstance: String): DataFrame = {
-    val outCol = FixedPivot.sanitize(dataSource)
-    fact
-      .join(broadcast(source), "source_id")
-      .join(broadcast(station), "station_id")
-      .filter(col("station_name") === stationName &&
-        col("time") >= lit(timemark).cast("timestamp") &&
-        col("time") <= lit(maxForecastEndtime).cast("timestamp") &&
-        col("timemark") === lit(timemark).cast("timestamp") &&
-        col("data_source") === dataSource &&
-        col("source_instance") === sourceInstance)
+      dataSource: String, sourceInstance: String): DataFrame =
+    stationFacts(fact, source, station, stationName,
+      timeBetween(timemark, maxForecastEndtime) &&
+        col("timemark") === lit(timemark).cast("timestamp"),
+      col("data_source") === dataSource && col("source_instance") === sourceInstance)
       .select(
         date_format(col("time"), "yyyy-MM-dd HH:mm:ss").as("time_stamp"),
-        col("water_level").as(outCol))
+        col("water_level").as(FixedPivot.sanitize(dataSource)))
       .orderBy("time_stamp")
-  }
 
   /** get_nowcast_timeseries_station_data(station, start, end,
     * dataSource, sourceInstance) — like forecast but an open time
@@ -178,21 +216,14 @@ object QueryApi {
   def nowcastTimeseriesStationData(
       fact: DataFrame, source: DataFrame, station: DataFrame,
       stationName: String, startDate: String, endDate: String,
-      dataSource: String, sourceInstance: String): DataFrame = {
-    val outCol = FixedPivot.sanitize(dataSource)
-    fact
-      .join(broadcast(source), "source_id")
-      .join(broadcast(station), "station_id")
-      .filter(col("station_name") === stationName &&
-        col("time") >= lit(startDate).cast("timestamp") &&
-        col("time") <= lit(endDate).cast("timestamp") &&
-        col("data_source") === dataSource &&
-        col("source_instance") === sourceInstance)
+      dataSource: String, sourceInstance: String): DataFrame =
+    stationFacts(fact, source, station, stationName,
+      timeBetween(startDate, endDate),
+      col("data_source") === dataSource && col("source_instance") === sourceInstance)
       .select(
         date_format(col("time"), "yyyy-MM-dd HH:mm:ss").as("time_stamp"),
-        col("water_level").as(outCol))
+        col("water_level").as(FixedPivot.sanitize(dataSource)))
       .orderBy("time_stamp")
-  }
 
   /** JSON_AGG: serialize an already-pivoted frame to the reference's
     * JSON array-of-objects (keys in column order, nulls explicit). */

@@ -176,6 +176,7 @@ class SnapshotGaugeStore(spark2: SparkSession, root2: String)
 
   override def modelDataForRange(startDate: String, endDate: String,
       horizonDays: Int = 35): DataFrame = {
+    requireHorizon(horizonDays)
     val (lo, hi) = (dayOf(startDate) - horizonDays, dayOf(endDate) + horizonDays)
     modelTable.readPruned("run_day", lo, hi)
       .filter(col("run_day").between(lo, hi))

@@ -364,4 +364,64 @@ class PlanAuditSpec extends SparkSuite {
     assert("Exchange".r.findAllIn(p).size == 1,
       s"distinct must reuse the repartition(src) partitioning, plan:\n$full")
   }
+
+  for ((backend, expectedJobs) <- Seq("plain" -> 2, "snapshot" -> 1))
+    test(s"apsviz serve requests ($backend): no Exchange, $expectedJobs Spark job(s) on warm dims") {
+      // The serve path resolves the station/source dims on the driver
+      // and coalesces the request's fact rows to one partition, so the
+      // pivot, sort and JSON_AGG plan without any (broadcast) exchange.
+      // On the snapshot backend the fact read needs no schema-inference
+      // job either: a request on warm dim copies is exactly ONE job.
+      // The plain backend's parquet-directory read adds its inference
+      // job on top.
+      import graft.domain.{QueryServe, ServeFixture}
+      import scala.collection.mutable.ArrayBuffer
+      val sc = spark.sparkContext
+      val dir = java.nio.file.Files.createTempDirectory("graft-serve-plan").toString
+      val store = ServeFixture.build(spark, dir, backend)
+      val group = s"serve-plan-audit-$backend"
+      val jobs = new java.util.concurrent.atomic.AtomicInteger
+      val plans = ArrayBuffer.empty[String]
+      val jobListener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          if (j.properties != null && j.properties.getProperty("spark.jobGroup.id") == group)
+            jobs.incrementAndGet()
+      }
+      val planListener = new org.apache.spark.sql.util.QueryExecutionListener {
+        override def onSuccess(f: String,
+            qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
+          plans.synchronized { plans += qe.executedPlan.toString }
+        override def onFailure(f: String,
+            qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+      }
+      sc.addSparkListener(jobListener)
+      spark.listenerManager.register(planListener)
+      try {
+        val reqs = ServeFixture.requests.toMap
+        for (label <- Seq("obs A", "allparms A", "forecast A", "nowcast A")) {
+          val line = ServeFixture.line(reqs(label))
+          def run(): String = {
+            val out = ArrayBuffer.empty[String]
+            QueryServe.serve(store, Iterator(line), out += _)
+            out.head
+          }
+          assert(run().startsWith("["), label) // warms the dim copies
+          org.apache.spark.ListenerBusDrain(sc)
+          plans.synchronized { plans.clear() }
+          jobs.set(0)
+          sc.setJobGroup(group, label)
+          try assert(run().startsWith("["), label) finally sc.clearJobGroup()
+          org.apache.spark.ListenerBusDrain(sc)
+          assert(jobs.get == expectedJobs,
+            s"$label ran ${jobs.get} Spark jobs on warm dims, expected $expectedJobs")
+          assert(plans.nonEmpty, label)
+          // "Exchange" covers shuffle and broadcast exchanges, and the
+          // AQE query stages that wrap them
+          plans.foreach(p => assert(!p.contains("Exchange"), s"$label planned an exchange:\n$p"))
+        }
+      } finally {
+        spark.listenerManager.unregister(planListener)
+        sc.removeSparkListener(jobListener)
+      }
+    }
 }
